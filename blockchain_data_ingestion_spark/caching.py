@@ -76,13 +76,19 @@ def release_checkpoint(df: DataFrame) -> None:
     """Free the block-manager storage behind a localCheckpoint'ed
     DataFrame (superseded fixpoint state). `localCheckpoint` persists
     the materialized RDD with no public unpersist API; the LogicalRDD's
-    backing RDD is reachable through the analyzed plan. Best-effort —
+    backing RDD is reachable through the analyzed plan. The blocks are
+    freed through ``SparkContext.unpersistRDD`` rather than
+    ``RDD.unpersist``: both drop the blocks and the persistent-RDD
+    entry, but ``RDD.unpersist`` also logs a WARN ("was locally
+    checkpointed ... cannot be recomputed") for every release, which
+    is this function's whole purpose, not a hazard. Best-effort —
     storage cleanup must never fail the query. THE one definition of
     this private-API route (llm_pipeline re-exports it): a Spark
     upgrade that changes the QueryExecution surface is fixed here,
     once."""
     try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+        rdd.context().unpersistRDD(rdd.id(), False)
     except Exception:  # noqa: BLE001
         pass
 

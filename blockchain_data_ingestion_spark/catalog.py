@@ -43,11 +43,15 @@ _TUNED: set[int] = set()
 _LAYOUT_DIR = Path(__file__).resolve().parent.parent / ".layout_cache"
 #: Below this row count a serial scan is cheaper than any re-layout.
 _LAYOUT_MIN_ROWS = 50_000
-#: ... unless the rows are FAT (text documents, embedding vectors): a
-#: 5 000-row corpus is megabytes of text whose derived work (shingling,
-#: MinHash, bigram explode) is the CPU hot path of the whole dedup
-#: family — serializing it on one core costs more than any re-layout.
-#: Either threshold (rows OR bytes) triggers the re-chunk.
+#: ... or the file is at least this many bytes (fat rows: text
+#: documents, embedding vectors). Either threshold (rows OR bytes)
+#: triggers the re-chunk. The re-chunk alone does not parallelize a
+#: scan: Spark splits a file by ``spark.sql.files.maxPartitionBytes``
+#: (1 MB by default, see session.py), so a copy under one split — the
+#: sf0.1 ``documents`` corpus is ~0.6 MB — still scans as ONE task
+#: whatever its row-group count. The dedup family's CPU-heavy derived
+#: work (shingling, MinHash) spreads across cores through its own
+#: ``REPARTITION`` after the scan, not through this layout.
 _LAYOUT_MIN_BYTES = 262_144
 #: Target split fan-out for re-chunked files.
 _LAYOUT_GROUPS = 32
@@ -68,6 +72,9 @@ def _optimized_path(sf_dir: str, name: str) -> str:
     regenerated fixtures invalidate stale copies. Same rows, same schema,
     same format; only the chunking differs (measured: sf0.1 q1 agg
     0.43 s -> 0.20 s with ``spark.sql.files.maxPartitionBytes=1m``).
+    A copy only scans in parallel once it is larger than one split;
+    below that (the fat-row ``documents`` corpus at sf0.1) it is still
+    a one-task scan — see ``_LAYOUT_MIN_BYTES``.
 
     Opt out with ``SPARK_GRAFT_NO_LAYOUT_OPT=1`` (e.g. to benchmark the
     raw single-row-group scan path itself).

@@ -496,20 +496,29 @@ _MINHASH_INLINE_MAX_AVG_TEXT_BYTES = 16_384
 #: for both self-join sides (2 corpus scans) instead of writing ~3× the
 #: corpus to bounded executor local disk. Local default 8 GiB (cache
 #: ≈ 24 GiB worst case on the 128 GiB box); production boxes size it to
-#: their local-disk budget via the env var.
-_MINHASH_INLINE_CACHE_MAX_TOTAL_TEXT_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_MINHASH_CACHE_BUDGET_BYTES", 8 * 1024**3))
+#: their local-disk budget via the env var, read at call time so a
+#: malformed value fails the op that reads it, not the registry import.
+_MINHASH_INLINE_CACHE_MAX_TOTAL_TEXT_BYTES = 8 * 1024**3
 
 
 def _minhash_inline_cache_fits(sf_dir: str) -> bool:
     """True iff the inline band table's persist stays inside the byte
     budget (footer metadata only; unknown backing → True, matching the
     avg-bytes gate's fixture-scale default)."""
+    raw = os.environ.get("SPARK_GRAFT_MINHASH_CACHE_BUDGET_BYTES")
+    budget = _MINHASH_INLINE_CACHE_MAX_TOTAL_TEXT_BYTES
+    if raw is not None:
+        try:
+            budget = int(raw)
+        except ValueError:
+            raise ValueError(
+                f"SPARK_GRAFT_MINHASH_CACHE_BUDGET_BYTES={raw!r}; "
+                "expected an integer byte count") from None
     rows = table_row_count(sf_dir, "documents")
     avg = table_column_avg_bytes(sf_dir, "documents", "text")
     if rows is None or avg is None:
         return True
-    return rows * avg <= _MINHASH_INLINE_CACHE_MAX_TOTAL_TEXT_BYTES
+    return rows * avg <= budget
 _DUCK_BANDS = ", ".join(
     "md5(" + " || '|' || ".join(
         f"sig_{b * _R + r}" for r in range(_R)) + f") AS band_{b}"

@@ -17,6 +17,7 @@ logical plans scale to a multi-executor cluster:
 
 from __future__ import annotations
 
+import logging
 import os
 
 # Use py4j's legacy GatewayServer instead of the pinned-thread
@@ -40,6 +41,26 @@ os.environ.setdefault("PYSPARK_PIN_THREAD", "false")
 from pyspark.sql import SparkSession  # noqa: E402
 
 __all__ = ["get_spark", "tune_session"]
+
+_log = logging.getLogger(__name__)
+
+#: Size of Spark's generated-class cache (an LRU keyed by generated
+#: source; Spark's default holds 100 classes). The engine's working set
+#: is larger. Distinct classes compiled by one pass with a large cache:
+#: 179 for the three dedup keys (`dedup_clusters`, `op_pipeline_e2e`,
+#: `op_minhash_dedup`) at sf0.001, 381 for those plus 13 analytics keys
+#: at sf0.1, 37 for one ingest micro-batch. At 100 entries each dedup
+#: key evicts the classes the next one needs, so every warm query
+#: re-runs Janino (177 recompiles per warm dedup pass at sf0.001, 412
+#: per warm analytics+dedup pass at sf0.1) and restarts that code cold
+#: in the JVM interpreter; at 1024 a warm pass compiles 0 (sf0.001) or
+#: 4-8 (sf0.1) classes. Memory cost: none measurable — Metaspace after
+#: three analytics+dedup passes at sf0.1 read 177 MB at 1024 against
+#: 184 MB at 100, where recompiled copies pile up until class
+#: unloading. Static conf: only a builder can set it, so it is not in
+#: ``_DEFAULTS`` (which ``tune_session`` replays on live sessions).
+_CODEGEN_CACHE_MAX_ENTRIES = 1024
+_CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
 
 _DEFAULTS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
@@ -76,10 +97,11 @@ _DEFAULTS: dict[str, str] = {
     # 128 MB default packs every file into one split and the scan runs on
     # one core. 1 MB splits spread the multi-row-group layout-cache copies
     # (see catalog._optimized_path) across the local cores (measured q1
-    # 0.43 s -> 0.20 s at sf0.1). A real deployment reading TB-scale
-    # files overrides this back up via spark-submit — many small tasks at
-    # 100 TB would swamp the scheduler; the right production value is
-    # 128-512 MB with files written in like-sized row groups.
+    # 0.43 s -> 0.20 s at sf0.1); a copy under 1 MB stays one split. A
+    # real deployment reading TB-scale files overrides this back up via
+    # spark-submit — many small tasks at 100 TB would swamp the
+    # scheduler; the right production value is 128-512 MB with files
+    # written in like-sized row groups.
     "spark.sql.files.maxPartitionBytes":
         os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "1m"),
 }
@@ -102,6 +124,8 @@ def get_spark(app_name: str = "blockchain_data_ingestion_spark",
     builder = builder.config("spark.sql.shuffle.partitions", str(n_shuffle))
     builder = builder.config("spark.driver.memory",
                              os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+    builder = builder.config(_CODEGEN_CACHE_CONF,
+                             str(_CODEGEN_CACHE_MAX_ENTRIES))
     # Shuffle/spill scratch on tmpfs when available: local-mode shuffle
     # writes are tiny but latency-critical, and a co-tenant hammering the
     # shared disk turns millisecond spill writes into multi-second fsync
@@ -167,5 +191,23 @@ def tune_session(spark: SparkSession) -> SparkSession:
                            str(max(cores, 1)))
     except Exception:
         pass
+    _check_codegen_cache(spark)
     _quiet_bounded_window_warning(spark)
     return spark
+
+
+def _check_codegen_cache(spark: SparkSession) -> None:
+    """Log when a session built elsewhere (e.g. a driver's own builder)
+    runs with a generated-class cache smaller than the engine's: the
+    conf is static, so ``tune_session`` cannot raise it, and warm
+    queries will recompile their generated code."""
+    try:
+        live = int(spark.conf.get(_CODEGEN_CACHE_CONF))
+    except Exception:  # noqa: BLE001 — unreadable conf: nothing to explain
+        return
+    if live < _CODEGEN_CACHE_MAX_ENTRIES:
+        _log.warning(
+            "%s=%d is below the engine's %d (static conf; set it when "
+            "building the session): warm queries will recompile "
+            "generated code", _CODEGEN_CACHE_CONF, live,
+            _CODEGEN_CACHE_MAX_ENTRIES)

@@ -495,12 +495,14 @@ def test_cc_labels_empty_graph(spark):
 
 def test_release_checkpoint_actually_unpersists(spark):
     """`_release_checkpoint` reaches a PRIVATE path
-    (`df._jdf.queryExecution().analyzed().rdd().unpersist`) behind a
-    broad try/except — a Spark upgrade can break the call silently and
-    the fixpoint loops (dedup_clusters, op_kcore, PageRank) would start
-    accumulating superseded round state (r8 VERDICT #6). This pins the
-    behavior: after localCheckpoint the backing blocks are registered
-    with the block manager; after _release_checkpoint they are gone."""
+    (`df._jdf.queryExecution().analyzed().rdd()`, freed through
+    `SparkContext.unpersistRDD`) behind a broad try/except — a Spark
+    upgrade can break the call silently and the fixpoint loops
+    (dedup_clusters, op_kcore, PageRank) would start accumulating
+    superseded round state (r8 VERDICT #6). This pins the behavior:
+    after localCheckpoint the backing blocks are registered with the
+    block manager; after _release_checkpoint they are gone, and so is
+    the RDD's persistent-RDD entry."""
     from blockchain_data_ingestion_spark.queries.llm_pipeline import (
         _release_checkpoint)
 
@@ -525,6 +527,8 @@ def test_release_checkpoint_actually_unpersists(spark):
     assert n_cached_rdds() < before, (
         "_release_checkpoint no longer frees the checkpoint blocks — "
         "the private analyzed().rdd() path has broken")
+    rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
+    assert rdd_id not in dict(spark.sparkContext._jsc.getPersistentRDDs())
 
 
 def test_token_budget_split_matches_greedy_reference(spark, sf_dir):

@@ -6,6 +6,10 @@ exact-equivalent physical shapes) and its hash-equality across shapes.
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 
 from blockchain_data_ingestion_spark.queries import llm_text, load_all
@@ -106,3 +110,28 @@ def test_minhash_inline_cache_gate_is_byte_budgeted(spark, sf_dir,
         "over-budget inline still persists a corpus-scale band table")
     assert "collect_list" in plan  # still the inline verification shape
     assert cached_rows == _rows(uncached)
+
+
+def test_malformed_cache_budget_fails_the_op_not_the_import(
+        spark, sf_dir, monkeypatch):
+    """A malformed ``SPARK_GRAFT_MINHASH_CACHE_BUDGET_BYTES`` used to
+    break the registry import (a bare ``int()`` at module load), taking
+    every key down with it. It is read when the inline gate runs: the
+    registry imports, and only the op that reads it fails, naming the
+    variable."""
+    monkeypatch.setenv("SPARK_GRAFT_MINHASH_CACHE_BUDGET_BYTES", "8GiB")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c",
+         "from blockchain_data_ingestion_spark.queries import load_all;"
+         "print(len(load_all()))"],
+        capture_output=True, text=True, timeout=300, cwd=root)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert int(proc.stdout.split()[-1]) > 300
+
+    # pin inline mode, the shape that consults the budget
+    monkeypatch.setattr(
+        llm_text, "_MINHASH_INLINE_MAX_AVG_TEXT_BYTES", 1 << 30)
+    with pytest.raises(ValueError,
+                       match="SPARK_GRAFT_MINHASH_CACHE_BUDGET_BYTES"):
+        load_all()["op_minhash_dedup"].spark(spark, sf_dir)
