@@ -16,7 +16,7 @@ The contract here closes the leak without giving up the caching:
   through :func:`scoped_persist` / :func:`scoped_checkpoint` /
   :func:`scoped_register`, which record the frame in a module-level
   registry. (Superseded fixpoint rounds are still released eagerly
-  in-function via ``_release_checkpoint`` — this registry only holds
+  in-function via ``release_checkpoint`` — this registry only holds
   state the returned plan still needs.)
 - Callers call :func:`release_all` after materializing results. The
   test suite does this after every test (conftest autouse fixture)

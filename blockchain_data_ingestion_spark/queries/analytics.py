@@ -31,7 +31,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 
-from ..caching import scoped_persist, scoped_register, shared_persist
+from ..caching import (release_checkpoint, scoped_persist, scoped_register,
+                       shared_persist)
 from ..catalog import query_sql as Q
 from ..operators import bounded_window, distributed_ntile
 from ..catalog import table
@@ -3828,8 +3829,6 @@ def op_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CTE inlining, fixed the same way: materialize per round). The
     # superseded round's checkpoint blocks are released immediately
     # (the dedup_clusters discipline), so state is one |V|-row table.
-    from .llm_pipeline import _release_checkpoint
-
     alive = (edges.select(F.col("u").alias("node")).distinct()
              .localCheckpoint())
     n_prev = alive.count()  # driver-ok: |V|-row checkpointed state
@@ -3842,7 +3841,7 @@ def op_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         nxt = (deg.filter(F.col("c") >= _KCORE_K)
                .select(F.col("u").alias("node")).localCheckpoint())
         n = nxt.count()  # driver-ok: |V|-row checkpointed round state
-        _release_checkpoint(alive)
+        release_checkpoint(alive)
         alive = nxt
         if n == n_prev:
             converged = True

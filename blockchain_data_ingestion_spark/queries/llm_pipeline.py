@@ -387,12 +387,6 @@ def op_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CC_MAX_ROUNDS = 16
 
 
-#: single definition lives in caching.py (the code-review r10 dedup);
-#: kept importable under the old name — kcore and the release tests
-#: reach it through this module.
-_release_checkpoint = release_checkpoint
-
-
 def _cc_labels(pairs: DataFrame) -> DataFrame:
     """Connected-component labels over an undirected (doc_a, doc_b) pair
     graph: every node maps to the MINIMUM doc_id of its component.
@@ -484,7 +478,7 @@ def _cc_labels(pairs: DataFrame) -> DataFrame:
                                       .alias("cluster_id"))
                                 .localCheckpoint(eager=False))
             cur_sum = _witness(new_labels)
-            _release_checkpoint(labels)
+            release_checkpoint(labels)
             labels = new_labels
             if cur_sum == prev_sum:
                 break

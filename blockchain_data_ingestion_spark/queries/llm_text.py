@@ -9,9 +9,9 @@ dedup family (exact, n-gram Jaccard, MinHash+LSH, SimHash) — over the
 Cross-engine determinism strategy (these ops are ratio/hash heavy):
 - ratios surface as **ppm BIGINTs** (``floor(1e6 * a / b)``) — integer
   end-to-end, no float-rounding divergence between Spark and DuckDB;
-- hash signatures are **md5 hex strings**; MinHash takes the
-  *lexicographic* min of ``md5(seed || shingle)`` so no hex→int
-  conversion is needed on either engine;
+- MinHash hashes each shingle once (the first 7 hex chars of md5 as
+  a BIGINT) and takes 16 integer universal-hash minima; LSH band keys
+  are md5 hex strings of the signature slices;
 - SimHash needs integer hashes: both engines parse the first 15 hex
   chars of md5 into a BIGINT (60 bits, no sign issues).
 
@@ -467,13 +467,20 @@ _AB = [((2 * i + 1) * 2_654_435_761 % _M31 | 1, (i * 40_503 * 65_537) % _M31)
        for i in range(_N_HASH)]
 _SPARK_H = "cast(conv(substring(md5(s), 1, 7), 16, 10) as bigint)"
 _DUCK_H = "CAST(('0x' || substr(md5(s), 1, 7)) AS BIGINT)"
-_SPARK_SIGS = ", ".join(
-    f"min(({a} * h + {b}) % {_M31}) AS sig_{i}"
-    for i, (a, b) in enumerate(_AB))
+#: the 16 permutations of the base hash ``h``; the per-doc ``min`` of
+#: each is one signature component (same text on both engines).
+_SIG_EXPRS = [f"({a} * h + {b}) % {_M31}" for a, b in _AB]
 _DUCK_SIGS = ", ".join(
-    f"min(({a} * h + {b}) % {_M31}) AS sig_{i}"
-    for i, (a, b) in enumerate(_AB))
+    f"min({e}) AS sig_{i}" for i, e in enumerate(_SIG_EXPRS))
 _R = _N_HASH // _N_BANDS
+
+
+def _sig_matches(a: str, b: str) -> str:
+    """Number of equal signature components of rows ``a`` and ``b``."""
+    return " + ".join(
+        f"CASE WHEN {a}.sig_{i} = {b}.sig_{i} THEN 1 ELSE 0 END"
+        for i in range(_N_HASH))
+
 
 #: Verification-shape gate for op_minhash_dedup: above this average
 #: uncompressed documents.text bytes/row (parquet-footer metadata, no
@@ -519,6 +526,8 @@ def _minhash_inline_cache_fits(sf_dir: str) -> bool:
     if rows is None or avg is None:
         return True
     return rows * avg <= budget
+
+
 _DUCK_BANDS = ", ".join(
     "md5(" + " || '|' || ".join(
         f"sig_{b * _R + r}" for r in range(_R)) + f") AS band_{b}"
@@ -598,143 +607,42 @@ def op_minhash_dedup(spark: SparkSession, sf_dir: str,
 
     Gate: average uncompressed bytes/row of ``documents.text`` from
     parquet footers (`catalog.table_column_avg_bytes`, zero scan) vs
-    ``_MINHASH_INLINE_MAX_AVG_TEXT_BYTES``; overridable for probes via
-    ``SPARK_GRAFT_MINHASH_VERIFY=inline|rejoin``. Both variants are
+    ``_MINHASH_INLINE_MAX_AVG_TEXT_BYTES``. Both variants are
     hash-equal by construction and pinned so by
-    tests/test_llm_text.py::test_minhash_rejoin_variant_hash_equal."""
-    mode = os.environ.get("SPARK_GRAFT_MINHASH_VERIFY", "auto")
-    if mode not in ("auto", "inline", "rejoin"):
-        raise ValueError(
-            f"SPARK_GRAFT_MINHASH_VERIFY={mode!r}; "
-            "expected auto|inline|rejoin")
-    if mode == "auto":
-        avg = table_column_avg_bytes(sf_dir, "documents", "text")
-        # Unknown backing → inline (fixture-scale default); fat docs →
-        # re-join. The threshold is avg TEXT bytes: shingle-set bytes
-        # scale linearly with it (k-gram overlap ≈ k× text), so text
-        # is the cheap, always-present proxy.
-        mode = ("rejoin" if avg is not None
-                and avg > _MINHASH_INLINE_MAX_AVG_TEXT_BYTES
-                else "inline")
-        if mode == "rejoin":
-            # Gate decisions must be observable (VERDICT r14 item 5:
-            # "log the taken path") — the shape fuzz asserts this
-            # fires on its mega-doc catalog.
-            import warnings
-            warnings.warn(
-                f"op_minhash_dedup: avg documents.text bytes {avg:.0f}"
-                f" > {_MINHASH_INLINE_MAX_AVG_TEXT_BYTES}; auto gate"
-                " selected the doc_id-rejoin verification shape",
-                RuntimeWarning, stacklevel=2)
-    np = spark.sparkContext.defaultParallelism
-    return _minhash_pairs_df(spark, sf_dir, np, mode, docs=docs)
+    tests/test_llm_text.py::test_minhash_rejoin_variant_hash_equal.
 
-
-def _minhash_pairs_df(spark: SparkSession, sf_dir: str, np: int,
-                      mode: str, docs: DataFrame | None = None) -> DataFrame:
-    """The op_minhash_dedup plan, in the requested verification shape
-    (``mode`` ∈ {"inline", "rejoin"} — see the op docstring).
-
-    Shared plan notes (both shapes):
-    - repartition up front: the corpus lands as one file = one scan
-      task, and everything downstream (shingling, 16×|shingles| md5s)
-      is CPU-bound — spread it across cores before the heavy
-      projections.
-    - Signatures via explode + groupBy: each md5(shingle) computed
-      exactly once. (An array-HOF formulation — array_min(transform())
-      per seed — reads prettier but Catalyst's projection collapse
-      inlines the 16 transforms into every downstream band expression,
-      an exponential recompute; measured 10× slower.)
-    - **The signature table is materialized ONCE (r15).** The band
-      self-join references its input twice, and Catalyst plans two
-      full scan→shingle→md5→17-aggregate subtrees for it (confirmed in
-      plans/r15/op_minhash_dedup_before.txt: operators (1)-(9) and
-      (12)-(20) are the same pipeline) — REPARTITION's round-robin
-      exchange blocks ReuseExchange. A lazy ``scoped_persist`` of the
-      per-doc band table collapses that to one corpus pass (guide
-      §1.2: don't compute things twice). Lazy, not eager: plan build
-      must stay zero-job (pinned by
-      test_minhash_gate_is_metadata_only...), and the broadcast build
-      side fills the cache before the probe side streams. The cached
-      frame is doc-grain (1 row/doc — bands + shingle set inline-mode
-      only), released by the caller via release_all().
-    - In rejoin mode the exploded shingle index ``sh`` is read by FOUR
-      subtrees (signature build, cardinalities, both sides of the
-      intersection join) — it is persisted too, so the tokenize+
-      shingle+explode pipeline runs once instead of four times (same
-      treatment as `_shingle_index` in the n-gram pair, r15).
-    - Multi-band collisions produce duplicate candidates. inline dedups
-      AFTER the verification filter (post-filter set is tiny — one less
-      shuffle over the wide payload set); rejoin dedups BEFORE the
-      verify join (bare id pairs are cheap to DISTINCT, and duplicate
-      pairs would double-count the intersection join)."""
-    band_cols = [f"{e} AS band_{b}" for b, e in enumerate(_split_bands())]
-    # ``docs`` (optional, columns doc_id + toks) lets a composition such
-    # as op_pipeline_e2e feed ONE shared tokenized corpus into every
-    # stage instead of each stage re-scanning documents.text (guide
-    # §8.4: decide on lightweight proxies, read the heavy column once).
-    # Standalone, the corpus is scanned + tokenized here, repartitioned
-    # up front (the corpus lands as one file = one scan task, and the
-    # shingling + 16×|shingles| hash pipeline is CPU-bound).
-    if docs is None:
-        docs = Q(spark, sf_dir,
-                 f"SELECT /*+ REPARTITION({np}) */ doc_id,"
-                 f" {_SPARK_TOKS} AS toks FROM documents")
-    d = docs.selectExpr("doc_id", f"{_SPARK_SHINGLES} AS shingles")
-    sh_plan = d.selectExpr("doc_id", "explode(shingles) AS s")
-    shh = sh_plan.selectExpr("doc_id", "s", f"{_SPARK_H} AS h")
-    sig_aggs = [F.expr(f"min(({a} * h + {b}) % {_M31})").alias(f"sig_{i}")
-                for i, (a, b) in enumerate(_AB)]
-    bands_inline = ", ".join(
-        f"named_struct('b_idx', {b}, 'band', band_{b})"
-        for b in range(_N_BANDS))
-    if mode == "inline":
-        band = (shh.groupBy("doc_id")
-                   .agg(*sig_aggs,
-                        F.collect_list("s").alias("shingles"))
-                   .selectExpr("doc_id", "shingles", *band_cols))
-        # Persist only inside the byte budget (r16): the cache carries
-        # the full shingle payload per doc — see
-        # _MINHASH_INLINE_CACHE_MAX_TOTAL_TEXT_BYTES. Over budget the
-        # identical plan runs unpersisted (both self-join sides re-plan
-        # the signature subtree — 2 scans beat a corpus-scale spill).
-        if _minhash_inline_cache_fits(sf_dir):
-            band = scoped_persist(band)
-        bl = band.selectExpr(
-            "doc_id", "shingles", f"inline(array({bands_inline}))")
-        a, b = bl.alias("a"), bl.alias("b")
-        cand = (a.join(b, [F.col("a.b_idx") == F.col("b.b_idx"),
-                           F.col("a.band") == F.col("b.band"),
-                           F.col("a.doc_id") < F.col("b.doc_id")])
-                 .select(F.col("a.doc_id").alias("doc_a"),
-                         F.col("b.doc_id").alias("doc_b"),
-                         F.col("a.shingles").alias("sha"),
-                         F.col("b.shingles").alias("shb")))
-        return (cand.selectExpr(
-                    "doc_a", "doc_b",
-                    "size(array_intersect(sha, shb)) AS c",
-                    "size(sha) AS na", "size(shb) AS nb")
-                    .where("2 * c >= (na + nb - c)")
-                    .selectExpr("doc_a", "doc_b",
-                                f"{_JACCARD_PPM} AS jaccard_ppm")
-                    .distinct())
-    # rejoin: bl carries (doc_id, b_idx, band) ONLY — no payload rides
-    # the candidate shuffle. Verification mirrors the oracle's inter
-    # CTE: equi-join the shingle index on both ids, count matches.
-    sh = scoped_persist(sh_plan)
-    band = scoped_persist(
-        sh.selectExpr("doc_id", "s", f"{_SPARK_H} AS h")
-          .groupBy("doc_id")
-          .agg(*sig_aggs)
-          .selectExpr("doc_id", *band_cols))
-    bl = band.selectExpr("doc_id", f"inline(array({bands_inline}))")
-    a, b = bl.alias("a"), bl.alias("b")
-    cand = (a.join(b, [F.col("a.b_idx") == F.col("b.b_idx"),
-                       F.col("a.band") == F.col("b.band"),
-                       F.col("a.doc_id") < F.col("b.doc_id")])
-             .select(F.col("a.doc_id").alias("doc_a"),
-                     F.col("b.doc_id").alias("doc_b"))
-             .distinct())
+    Multi-band collisions produce duplicate candidates. inline dedups
+    AFTER the verification filter (post-filter set is tiny — one less
+    shuffle over the wide payload set); rejoin dedups BEFORE the
+    verify join (bare id pairs are cheap to DISTINCT, and duplicate
+    pairs would double-count the intersection join)."""
+    avg = table_column_avg_bytes(sf_dir, "documents", "text")
+    sh = _shingle_rows(spark, sf_dir, docs)
+    # Unknown backing → inline (fixture-scale default); fat docs →
+    # re-join. The threshold is avg TEXT bytes: shingle-set bytes
+    # scale linearly with it (k-gram overlap ≈ k× text), so text
+    # is the cheap, always-present proxy.
+    if avg is None or avg <= _MINHASH_INLINE_MAX_AVG_TEXT_BYTES:
+        return _verify_inline(_band_join(_minhash_bands(sh, sf_dir)))
+    # Gate decisions must be observable (VERDICT r14 item 5: "log the
+    # taken path") — the shape fuzz asserts this fires on its mega-doc
+    # catalog.
+    import warnings
+    warnings.warn(
+        f"op_minhash_dedup: avg documents.text bytes {avg:.0f}"
+        f" > {_MINHASH_INLINE_MAX_AVG_TEXT_BYTES}; auto gate"
+        " selected the doc_id-rejoin verification shape",
+        RuntimeWarning, stacklevel=2)
+    # rejoin: band rows carry (doc_id, b_idx, band) ONLY — no payload
+    # rides the candidate shuffle. Verification mirrors the oracle's
+    # inter CTE: equi-join the shingle index on both ids, count
+    # matches. ``sh`` feeds four subtrees, so it is persisted (see
+    # `_minhash_bands` for why outside the byte budget).
+    sh = scoped_persist(sh)
+    cand = (_band_join(_minhash_bands(sh, sf_dir, shingles=False))
+            .select(F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b"))
+            .distinct())
     card = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     x, y = sh.alias("x"), sh.alias("y")
     inter = (cand.join(x, F.col("x.doc_id") == F.col("doc_a"))
@@ -752,11 +660,110 @@ def _minhash_pairs_df(spark: SparkSession, sf_dir: str, np: int,
                         f"{_JACCARD_PPM} AS jaccard_ppm"))
 
 
-def _split_bands() -> list[str]:
-    """Band md5 expressions (Spark SQL text), one per band."""
-    return ["md5(concat_ws('|', " + ", ".join(
-        f"sig_{b * _R + r}" for r in range(_R)) + "))"
+def _shingle_rows(spark: SparkSession, sf_dir: str,
+                  docs: DataFrame | None = None) -> DataFrame:
+    """Shingle rows ``(doc_id, s)``, one per distinct 3-gram of a doc.
+
+    ``docs`` (optional, columns doc_id + toks) lets a composition such
+    as op_pipeline_e2e feed ONE shared tokenized corpus into every
+    stage instead of each stage re-scanning documents.text (guide
+    §8.4: decide on lightweight proxies, read the heavy column once).
+    Standalone, the corpus is scanned + tokenized here, repartitioned
+    up front: it lands as one file = one scan task, and the shingling
+    + 16×|shingles| hash pipeline downstream is CPU-bound."""
+    if docs is None:
+        np = spark.sparkContext.defaultParallelism
+        docs = Q(spark, sf_dir,
+                 f"SELECT /*+ REPARTITION({np}) */ doc_id,"
+                 f" {_SPARK_TOKS} AS toks FROM documents")
+    return (docs.selectExpr("doc_id", f"{_SPARK_SHINGLES} AS shingles")
+                .selectExpr("doc_id", "explode(shingles) AS s"))
+
+
+def _minhash_bands(sh: DataFrame, sf_dir: str, shingles: bool = True,
+                   sigs: bool = False) -> DataFrame:
+    """The one MinHash path of the dedup family: shingle rows
+    ``(doc_id, s)`` → one base hash per shingle → 16 signature minima
+    → 4 LSH band keys, returned as band rows ``(doc_id, [shingles],
+    [sig_0..sig_15], b_idx, band)``, one row per (doc, band).
+    ``shingles`` re-nests each doc's shingle set (``collect_list``) so
+    verification reads it off the candidate row; ``sigs`` keeps the
+    signature components for the estimate consumers.
+
+    - Signatures via explode + groupBy: each md5(shingle) computed
+      exactly once. (An array-HOF formulation — array_min(transform())
+      per seed — reads prettier but Catalyst's projection collapse
+      inlines the 16 transforms into every downstream band expression,
+      an exponential recompute; measured 10× slower.)
+    - **Persist policy.** Every consumer self-joins the band rows, and
+      Catalyst plans a full scan→shingle→md5→17-aggregate subtree for
+      each side (r15 plan capture: both sides the same 9 operators) —
+      the round-robin REPARTITION exchange blocks ReuseExchange. A lazy
+      ``scoped_persist`` of the doc-grain table (bands plus payload,
+      before the band explode) collapses that to one corpus pass
+      (guide §1.2). Lazy, not eager: plan build stays zero-job (pinned
+      by test_minhash_gate_is_metadata_only), and the side that runs
+      first fills the cache. The caller releases it via release_all().
+    - A table carrying the shingle payload (~k× the text bytes, k=3
+      overlap) is persisted only inside `_minhash_inline_cache_fits`:
+      over budget the identical plan runs unpersisted, and 2 corpus
+      scans beat a corpus-scale spill. The payload-free table (4 md5
+      strings per doc) is always persisted.
+    - Rejoin mode's exploded shingle index ``sh`` is persisted by
+      `op_minhash_dedup` outside this budget on purpose: it feeds FOUR
+      subtrees (this signature build, the cardinalities, both sides of
+      the intersection join) against the inline table's two, so
+      skipping it costs four corpus passes to save one spill — on the
+      fat-doc corpora rejoin is picked for, where a pass is dearest."""
+    aggs = [F.expr(f"min({e})").alias(f"sig_{i}")
+            for i, e in enumerate(_SIG_EXPRS)]
+    payload = [f"sig_{i}" for i in range(_N_HASH)] if sigs else []
+    if shingles:
+        aggs.append(F.collect_list("s").alias("shingles"))
+        payload.insert(0, "shingles")
+    band_cols = ["md5(concat_ws('|', " + ", ".join(
+        f"sig_{b * _R + r}" for r in range(_R)) + f")) AS band_{b}"
         for b in range(_N_BANDS)]
+    band = (sh.selectExpr("doc_id", "s", f"{_SPARK_H} AS h")
+              .groupBy("doc_id").agg(*aggs)
+              .selectExpr("doc_id", *payload, *band_cols))
+    if not shingles or _minhash_inline_cache_fits(sf_dir):
+        band = scoped_persist(band)
+    bands_inline = ", ".join(
+        f"named_struct('b_idx', {b}, 'band', band_{b})"
+        for b in range(_N_BANDS))
+    return band.selectExpr("doc_id", *payload,
+                           f"inline(array({bands_inline}))")
+
+
+def _band_join(a: DataFrame, b: DataFrame | None = None) -> DataFrame:
+    """LSH candidates: band rows ``a`` ⋈ ``b`` (aliased "a" and "b")
+    sharing a full band. Without ``b``, the self-join of ``a`` over
+    unordered pairs (``a.doc_id < b.doc_id``). A pair colliding in
+    several bands appears once per band; callers dedup."""
+    cond = [F.col("a.b_idx") == F.col("b.b_idx"),
+            F.col("a.band") == F.col("b.band")]
+    if b is None:
+        b = a
+        cond.append(F.col("a.doc_id") < F.col("b.doc_id"))
+    return a.alias("a").join(b.alias("b"), cond)
+
+
+def _verify_inline(cand: DataFrame,
+                   ids: tuple[str, str] = ("doc_a", "doc_b")) -> DataFrame:
+    """Exact-Jaccard verification read off `_band_join` rows that carry
+    both shingle sets: the pairs with Jaccard ≥ 0.5, as ``(*ids,
+    jaccard_ppm)``, deduplicated after the filter."""
+    x, y = ids
+    return (cand.select(F.col("a.doc_id").alias(x),
+                        F.col("b.doc_id").alias(y),
+                        F.col("a.shingles").alias("sha"),
+                        F.col("b.shingles").alias("shb"))
+                .selectExpr(x, y, "size(array_intersect(sha, shb)) AS c",
+                            "size(sha) AS na", "size(shb) AS nb")
+                .where("2 * c >= (na + nb - c)")
+                .selectExpr(x, y, f"{_JACCARD_PPM} AS jaccard_ppm")
+                .distinct())
 
 
 # ---------------------------------------------------------------------------
@@ -1149,40 +1156,11 @@ def op_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the split filters push into each branch. Oracle cross-checks by
     filtering the full pair set to cross-parity pairs — same result,
     quadratic route."""
-    np = spark.sparkContext.defaultParallelism
-    band_cols = ", ".join(
-        f"{e} AS band_{b}" for b, e in enumerate(_split_bands()))
-    bands_inline = ", ".join(
-        f"named_struct('b_idx', {b}, 'band', band_{b})"
-        for b in range(_N_BANDS))
-    return Q(spark, sf_dir, f"""
-        WITH raw AS (SELECT /*+ REPARTITION({np}) */ doc_id, text
-                     FROM documents),
-        d AS (SELECT doc_id, {_SPARK_SHINGLES} AS shingles
-              FROM (SELECT doc_id, {_SPARK_TOKS} AS toks FROM raw)),
-        sh AS (SELECT doc_id, explode(shingles) AS s FROM d),
-        shh AS (SELECT doc_id, s, {_SPARK_H} AS h FROM sh),
-        sig AS (SELECT doc_id, {_SPARK_SIGS},
-                       collect_list(s) AS shingles
-                FROM shh GROUP BY doc_id),
-        band AS (SELECT doc_id, shingles, {band_cols} FROM sig),
-        bl AS (SELECT doc_id, shingles,
-                      inline(array({bands_inline}))
-               FROM band),
-        corpus_ix AS (SELECT * FROM bl WHERE doc_id % 2 = 0),
-        batch AS (SELECT * FROM bl WHERE doc_id % 2 = 1),
-        cand AS (SELECT c.doc_id AS corpus_doc, n.doc_id AS new_doc,
-                        c.shingles AS sha, n.shingles AS shb
-                 FROM corpus_ix c JOIN batch n
-                   ON c.b_idx = n.b_idx AND c.band = n.band)
-        SELECT DISTINCT corpus_doc, new_doc, {_JACCARD_PPM} AS jaccard_ppm
-        FROM (SELECT corpus_doc, new_doc,
-                     size(array_intersect(sha, shb)) AS c,
-                     size(sha) AS na, size(shb) AS nb
-              FROM cand)
-        WHERE 2 * c >= (na + nb - c)
-        ORDER BY corpus_doc, new_doc
-    """)
+    bl = _minhash_bands(_shingle_rows(spark, sf_dir), sf_dir)
+    return (_verify_inline(_band_join(bl.where("doc_id % 2 = 0"),
+                                      bl.where("doc_id % 2 = 1")),
+                           ("corpus_doc", "new_doc"))
+            .orderBy("corpus_doc", "new_doc"))
 
 
 # ---------------------------------------------------------------------------
@@ -1852,9 +1830,7 @@ _MH_EST_DUCK_SQL = f"""
     WITH {_DUCK_MINHASH_CTES},
     est AS (
       SELECT c.doc_a, c.doc_b,
-             CAST(({" + ".join(
-                 f"CASE WHEN sa.sig_{i} = sb.sig_{i} THEN 1 ELSE 0 END"
-                 for i in range(_N_HASH))}) * {_MH_EST_PPM_STEP}
+             CAST(({_sig_matches("sa", "sb")}) * {_MH_EST_PPM_STEP}
                   AS BIGINT) AS est_ppm
       FROM cand c
       JOIN sig sa ON sa.doc_id = c.doc_a
@@ -1890,58 +1866,36 @@ def op_minhash_est_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     universal-hash constants as `op_minhash_dedup`), so the estimate
     is a count of integer equalities; the exact side is the
     registered Jaccard arithmetic; a candidate pair with NO shared
-    shingle (a pure band collision) scores exact 0 via the left
-    join's coalesce on both engines.
+    shingle (a pure band collision) scores exact 0 via a coalesce on
+    both engines.
 
-    Scale: identical candidate machinery to `op_minhash_dedup`
-    (per-row HOF signatures, band-keyed join) — the audit adds only
-    pair-table-sized joins back to the |docs|-row signature and
-    cardinality tables, so it costs one more uniform-key join than
-    the dedup it audits, never a second corpus pass."""
-    np_ = spark.sparkContext.defaultParallelism
-    band_cols = ", ".join(
-        f"{e} AS band_{b}" for b, e in enumerate(_split_bands()))
-    bands_inline = ", ".join(
-        f"named_struct('b_idx', {b}, 'band', band_{b})"
-        for b in range(_N_BANDS))
-    est_expr = " + ".join(
-        f"CASE WHEN sa.sig_{i} = sb.sig_{i} THEN 1 ELSE 0 END"
-        for i in range(_N_HASH))
-    sig_cols = ", ".join(f"sig_{i}" for i in range(_N_HASH))
-    return Q(spark, sf_dir, f"""
-        WITH raw AS (SELECT /*+ REPARTITION({np_}) */ doc_id, text
-                     FROM documents),
-        d AS (SELECT doc_id, {_SPARK_SHINGLES} AS shingles
-              FROM (SELECT doc_id, {_SPARK_TOKS} AS toks FROM raw)),
-        sh AS (SELECT doc_id, explode(shingles) AS s FROM d),
-        shh AS (SELECT doc_id, s, {_SPARK_H} AS h FROM sh),
-        sig AS (SELECT doc_id, {_SPARK_SIGS},
-                       collect_list(s) AS shingles
-                FROM shh GROUP BY doc_id),
-        band AS (SELECT doc_id, shingles, {sig_cols},
-                      {band_cols} FROM sig),
-        bl AS (SELECT doc_id, shingles, {sig_cols},
-                      inline(array({bands_inline}))
-               FROM band),
-        cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                        a.shingles AS sha, b.shingles AS shb,
-                        {est_expr.replace("sa.", "a.").replace("sb.", "b.")}
-                          AS n_match
-                 FROM bl a JOIN bl b
-                   ON a.b_idx = b.b_idx AND a.band = b.band
-                  AND a.doc_id < b.doc_id)
-        SELECT doc_a, doc_b,
-               CAST(n_match * {_MH_EST_PPM_STEP} AS BIGINT) AS est_ppm,
-               coalesce({_ppm("c", "na + nb - c")}, 0) AS exact_ppm,
-               abs(CAST(n_match * {_MH_EST_PPM_STEP} AS BIGINT)
-                   - coalesce({_ppm("c", "na + nb - c")}, 0))
-                 AS abs_err_ppm
-        FROM (SELECT doc_a, doc_b, n_match,
-                     size(array_intersect(sha, shb)) AS c,
-                     size(sha) AS na, size(shb) AS nb
-              FROM cand)
-        ORDER BY doc_a, doc_b
-    """)
+    Scale: the same band rows as `op_minhash_dedup` (`_minhash_bands`),
+    carrying the signature components beside the shingle set, so both
+    the estimate and the exact Jaccard are read off the candidate row
+    — no join back to a per-doc table, never a second corpus pass."""
+    return (_minhash_est_pairs(spark, sf_dir)
+            .selectExpr("doc_a", "doc_b", "est_ppm", "exact_ppm",
+                        "abs(est_ppm - exact_ppm) AS abs_err_ppm")
+            .orderBy("doc_a", "doc_b"))
+
+
+def _minhash_est_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every LSH candidate pair once, as ``(doc_a, doc_b, est_ppm,
+    exact_ppm)``: the signature estimate (matching components / 16)
+    next to the exact shingle-set Jaccard, 0 for a pure band collision
+    (no shared shingle). The pair table behind both
+    `op_minhash_est_vs_exact` and `op_minhash_threshold_sweep`."""
+    bl = _minhash_bands(_shingle_rows(spark, sf_dir), sf_dir, sigs=True)
+    return (_band_join(bl)
+            .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b",
+                        f"CAST(({_sig_matches('a', 'b')})"
+                        f" * {_MH_EST_PPM_STEP} AS BIGINT) AS est_ppm",
+                        "size(array_intersect(a.shingles, b.shingles)) AS c",
+                        "size(a.shingles) AS na", "size(b.shingles) AS nb")
+            .selectExpr("doc_a", "doc_b", "est_ppm",
+                        f"coalesce({_ppm('c', 'na + nb - c')}, 0)"
+                        " AS exact_ppm")
+            .distinct())
 
 
 # ---------------------------------------------------------------------------
@@ -2210,9 +2164,7 @@ _MH_SWEEP_DUCK_SQL = f"""
     WITH {_DUCK_MINHASH_CTES},
     est AS (
       SELECT c.doc_a, c.doc_b,
-             CAST(({" + ".join(
-                 f"CASE WHEN sa.sig_{i} = sb.sig_{i} THEN 1 ELSE 0 END"
-                 for i in range(_N_HASH))}) * {_MH_EST_PPM_STEP}
+             CAST(({_sig_matches("sa", "sb")}) * {_MH_EST_PPM_STEP}
                   AS BIGINT) AS est_ppm
       FROM cand c
       JOIN sig sa ON sa.doc_id = c.doc_a
@@ -2258,67 +2210,31 @@ def op_minhash_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     `op_confusion_matrix`, applied to the sketch).
 
     Determinism: exact integer signature matches and Jaccard
-    arithmetic; the sweep is three CASE aggregates over the same
-    candidate table; guards drop degenerate thresholds (no positive
-    predictions / no positives) identically on both engines.
+    arithmetic; the sweep is one aggregate per threshold over the
+    candidate pair table; guards drop degenerate thresholds (no
+    positive predictions / no positives) identically on both engines.
 
-    Scale: identical candidate machinery to the dedup keys; the
-    sweep costs |thresholds| passes over the PAIR table (pair-sized,
-    not corpus-sized). Widening the sweep widens a union of
-    constant-width aggregates, never a new corpus pass."""
-    np_ = spark.sparkContext.defaultParallelism
-    band_cols = ", ".join(
-        f"{e} AS band_{b}" for b, e in enumerate(_split_bands()))
-    bands_inline = ", ".join(
-        f"named_struct('b_idx', {b}, 'band', band_{b})"
-        for b in range(_N_BANDS))
-    sig_cols = ", ".join(f"sig_{i}" for i in range(_N_HASH))
-    est_expr = " + ".join(
-        f"CASE WHEN a.sig_{i} = b.sig_{i} THEN 1 ELSE 0 END"
-        for i in range(_N_HASH))
-    sweep_arms = " UNION ALL ".join(
-        f"""SELECT {t} AS threshold_ppm,
-               CAST(sum(CASE WHEN est_ppm >= {t} AND is_dup
-                        THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-               CAST(sum(CASE WHEN est_ppm >= {t} AND NOT is_dup
-                        THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-               CAST(sum(CASE WHEN est_ppm < {t} AND is_dup
-                        THEN 1 ELSE 0 END) AS BIGINT) AS fn
-        FROM truth""" for t in _MH_SWEEP_THRESHOLDS)
-    return Q(spark, sf_dir, f"""
-        WITH raw AS (SELECT /*+ REPARTITION({np_}) */ doc_id, text
-                     FROM documents),
-        d AS (SELECT doc_id, {_SPARK_SHINGLES} AS shingles
-              FROM (SELECT doc_id, {_SPARK_TOKS} AS toks FROM raw)),
-        sh AS (SELECT doc_id, explode(shingles) AS s FROM d),
-        shh AS (SELECT doc_id, s, {_SPARK_H} AS h FROM sh),
-        sig AS (SELECT doc_id, {_SPARK_SIGS},
-                       collect_list(s) AS shingles
-                FROM shh GROUP BY doc_id),
-        band AS (SELECT doc_id, shingles, {sig_cols},
-                        {band_cols} FROM sig),
-        bl AS (SELECT doc_id, shingles, {sig_cols},
-                      inline(array({bands_inline}))
-               FROM band),
-        truth AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                 CAST(({est_expr}) * {_MH_EST_PPM_STEP} AS BIGINT)
-                   AS est_ppm,
-                 coalesce({_ppm(
-                     "size(array_intersect(a.shingles, b.shingles))",
-                     "size(a.shingles) + size(b.shingles)"
-                     " - size(array_intersect(a.shingles, b.shingles))")},
-                   0) >= {_MH_SWEEP_TRUTH_PPM} AS is_dup
-          FROM bl a JOIN bl b
-            ON a.b_idx = b.b_idx AND a.band = b.band
-           AND a.doc_id < b.doc_id),
-        sweep AS ({sweep_arms})
-        SELECT threshold_ppm, tp, fp, fn,
-               {_ppm("tp", "tp + fp")} AS precision_ppm,
-               {_ppm("tp", "tp + fn")} AS recall_ppm
-        FROM sweep WHERE tp + fp > 0 AND tp + fn > 0
-        ORDER BY threshold_ppm
-    """)
+    Scale: the candidate pairs of `op_minhash_est_vs_exact`, built
+    once; each pair is replicated |thresholds| times and counted in
+    ONE groupBy(threshold_ppm) — pair-sized work, never a new corpus
+    pass, and widening the sweep only lengthens the threshold list."""
+    thresholds = ", ".join(map(str, _MH_SWEEP_THRESHOLDS))
+    return (_minhash_est_pairs(spark, sf_dir)
+            .selectExpr("est_ppm",
+                        f"exact_ppm >= {_MH_SWEEP_TRUTH_PPM} AS is_dup",
+                        f"explode(array({thresholds})) AS threshold_ppm")
+            .groupBy("threshold_ppm")
+            .agg(F.expr("count_if(est_ppm >= threshold_ppm AND is_dup)")
+                  .alias("tp"),
+                 F.expr("count_if(est_ppm >= threshold_ppm AND NOT is_dup)")
+                  .alias("fp"),
+                 F.expr("count_if(est_ppm < threshold_ppm AND is_dup)")
+                  .alias("fn"))
+            .where("tp + fp > 0 AND tp + fn > 0")
+            .selectExpr("threshold_ppm", "tp", "fp", "fn",
+                        f"{_ppm('tp', 'tp + fp')} AS precision_ppm",
+                        f"{_ppm('tp', 'tp + fn')} AS recall_ppm")
+            .orderBy("threshold_ppm"))
 
 
 # ---------------------------------------------------------------------------

@@ -494,17 +494,16 @@ def test_cc_labels_empty_graph(spark):
 
 
 def test_release_checkpoint_actually_unpersists(spark):
-    """`_release_checkpoint` reaches a PRIVATE path
+    """`release_checkpoint` reaches a PRIVATE path
     (`df._jdf.queryExecution().analyzed().rdd()`, freed through
     `SparkContext.unpersistRDD`) behind a broad try/except — a Spark
     upgrade can break the call silently and the fixpoint loops
     (dedup_clusters, op_kcore, PageRank) would start accumulating
     superseded round state (r8 VERDICT #6). This pins the behavior:
     after localCheckpoint the backing blocks are registered with the
-    block manager; after _release_checkpoint they are gone, and so is
+    block manager; after release_checkpoint they are gone, and so is
     the RDD's persistent-RDD entry."""
-    from blockchain_data_ingestion_spark.queries.llm_pipeline import (
-        _release_checkpoint)
+    from blockchain_data_ingestion_spark.caching import release_checkpoint
 
     df = spark.range(1000).selectExpr("id", "id * 2 AS v").localCheckpoint()
     df.count()
@@ -516,8 +515,8 @@ def test_release_checkpoint_actually_unpersists(spark):
 
     before = n_cached_rdds()
     assert before >= 1, "localCheckpoint left nothing in storage — " \
-        "the premise of _release_checkpoint changed"
-    _release_checkpoint(df)
+        "the premise of release_checkpoint changed"
+    release_checkpoint(df)
     # unpersist(blocking=False) is async; poll briefly
     import time
     for _ in range(50):
@@ -525,7 +524,7 @@ def test_release_checkpoint_actually_unpersists(spark):
             break
         time.sleep(0.1)
     assert n_cached_rdds() < before, (
-        "_release_checkpoint no longer frees the checkpoint blocks — "
+        "release_checkpoint no longer frees the checkpoint blocks — "
         "the private analyzed().rdd() path has broken")
     rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
     assert rdd_id not in dict(spark.sparkContext._jsc.getPersistentRDDs())

@@ -1,7 +1,9 @@
 """Text-dedup operator contracts the SQL oracle cannot see on its own:
 the size-gated verification-shape switch of `op_minhash_dedup` (the
 oracle only ever sees one result set; the gate picks between two
-exact-equivalent physical shapes) and its hash-equality across shapes.
+exact-equivalent physical shapes), its hash-equality across shapes, and
+the zero-job, byte-budgeted band-table persist that every key built on
+`_minhash_bands` shares.
 """
 
 from __future__ import annotations
@@ -58,12 +60,15 @@ def test_minhash_rejoin_band_rows_carry_no_payload(spark, sf_dir,
     assert "collect_list" in plan and "array_intersect" in plan
 
 
-def test_minhash_gate_is_metadata_only_and_env_overridable(
-        spark, sf_dir, monkeypatch):
-    """The gate reads parquet footers, not the cluster: building either
-    plan launches zero Spark jobs. The env override accepts exactly
-    {auto, inline, rejoin} and rejects anything else loudly (a typo'd
-    probe run must not silently fall back to auto)."""
+#: every key built on `_minhash_bands`, the one MinHash path.
+_MINHASH_KEYS = ("op_minhash_dedup", "op_incremental_dedup",
+                 "op_minhash_est_vs_exact", "op_minhash_threshold_sweep")
+
+
+@pytest.mark.parametrize("key", _MINHASH_KEYS)
+def test_minhash_gate_is_metadata_only(spark, sf_dir, key):
+    """The gates read parquet footers, not the cluster: building the
+    plan launches zero Spark jobs (the band-table persist is lazy)."""
     from blockchain_data_ingestion_spark.catalog import (
         table, table_column_avg_bytes)
 
@@ -72,24 +77,22 @@ def test_minhash_gate_is_metadata_only_and_env_overridable(
     table(spark, sf_dir, "documents")            # warm first-touch setup
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
-    load_all()["op_minhash_dedup"].spark(spark, sf_dir)
+    load_all()[key].spark(spark, sf_dir)
     assert set(tracker.getJobIdsForGroup(None)) == before
 
-    monkeypatch.setenv("SPARK_GRAFT_MINHASH_VERIFY", "bogus")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_MINHASH_VERIFY"):
-        load_all()["op_minhash_dedup"].spark(spark, sf_dir)
 
-
+@pytest.mark.parametrize("key", _MINHASH_KEYS)
 def test_minhash_inline_cache_gate_is_byte_budgeted(spark, sf_dir,
-                                                    monkeypatch):
-    """The inline band-table persist is gated on estimated TOTAL
-    corpus text bytes (r16, VERDICT r15 item 3): the cached frame
-    carries the full shingle payload per doc, so a many-small-docs
-    corpus must not write ~3x its size to executor local disk just
-    because the avg-bytes gate picked inline. Under budget the plan
-    carries an InMemoryRelation; over budget the SAME logical plan runs
-    unpersisted — and the results are identical either way."""
-    q = load_all()["op_minhash_dedup"].spark
+                                                    monkeypatch, key):
+    """The band-table persist of every inline-verifying MinHash key is
+    gated on estimated TOTAL corpus text bytes (r16, VERDICT r15 item
+    3): the cached frame carries the full shingle payload per doc, so
+    a many-small-docs corpus must not write ~3x its size to executor
+    local disk just because the avg-bytes gate picked inline. Under
+    budget the plan carries an InMemoryRelation; over budget the SAME
+    logical plan runs unpersisted — and the results are identical
+    either way."""
+    q = load_all()[key].spark
     # pin inline mode regardless of fixture stats
     monkeypatch.setattr(
         llm_text, "_MINHASH_INLINE_MAX_AVG_TEXT_BYTES", 1 << 30)
